@@ -77,7 +77,8 @@ def worker_env(cpus: int) -> dict:
         "JAVA_TOOL_OPTIONS": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
         "PYSPARK_SUBMIT_ARGS": (
             f"--conf spark.sql.warehouse.dir={os.path.join(WORK, 'warehouse')}"
-            f" --driver-java-options -Xmn256m pyspark-shell"),
+            f" --driver-java-options \"-Xms{DRIVER_MEMORY} -Xmn256m\""
+            f" pyspark-shell"),
     })
     env.pop("OMP_NUM_THREADS", None)
     return env
@@ -168,11 +169,15 @@ def main(argv: list[str] | None = None) -> int:
     summary = {
         "workload": args.workload, "seed": args.seed, "box": cfg["box"],
         "error_rate": f"{res['failed']}/{res['attempted']}",
-        "latency_samples": lat["n"], "beyond_p90": lat["beyond_p90"],
+        "latency_samples": lat["n"], "kinds": lat["kinds"],
+        "samples_per_kind": lat["min_per_kind"],
+        "kinds_beyond_p90": lat["beyond_p90"],
         "p90_supported": lat["p90_supported"], "passes": res["passes"],
         "measured_s": res["elapsed_s"], "check_s": res["check_s"],
         "setup_samples": len(res["setups_s"]),
-        "setup_first_s": res["setups_s"][0], "end_to_end": res["end_to_end"],
+        "setup_first_s": res["setups_s"][0],
+        "peak_rss_parts_mb": res["peak_rss_parts_mb"],
+        "end_to_end": res["end_to_end"],
     }
     print("summary " + json.dumps(summary))
     print(json.dumps({

@@ -1,4 +1,4 @@
-"""Percentile rule and self-time arithmetic."""
+"""Percentile rule, per-kind summary and self-time arithmetic."""
 
 import numpy as np
 import pytest
@@ -18,6 +18,26 @@ def test_summary_reports_sample_count():
     assert s["beyond_p90"] == 1 and not s["p90_supported"]
     s = stats.summarize([float(i) for i in range(100)])
     assert s["n"] == 100 and s["beyond_p90"] == 10 and s["p90_supported"]
+
+
+def test_kind_summary_uses_each_kinds_median():
+    # a burst on one sample of "a" moves neither its median nor the result
+    samples = [("a", 1.0), ("a", 1.2), ("a", 9.0), ("b", 2.0), ("b", 2.2),
+               ("b", 2.1), ("c", 4.0), ("c", 4.0), ("c", 4.0)]
+    s = stats.summarize_kinds(samples)
+    assert s["kind_median"] == {"a": 1.2, "b": 2.1, "c": 4.0}
+    assert s["n"] == 9 and s["kinds"] == 3 and s["min_per_kind"] == 3
+    assert s["p50"] == 2.1
+    assert s["p90"] == pytest.approx(2.1 + 0.8 * (4.0 - 2.1))
+    assert s["beyond_p90"] == 0 and not s["p90_supported"]
+    # closed-loop rate: 9 operations at their kinds' medians
+    assert s["per_s"] == pytest.approx(9 / (3 * (1.2 + 2.1 + 4.0)))
+
+
+def test_kind_summary_weighs_rates_by_count():
+    s = stats.summarize_kinds([("a", 1.0), ("a", 1.0), ("a", 1.0), ("b", 3.0)])
+    assert s["p50"] == 2.0 and s["min_per_kind"] == 1
+    assert s["per_s"] == pytest.approx(4 / 6.0)
 
 
 def _span(i, start, end, parent=None):

@@ -7,7 +7,8 @@ Phases, in order:
    server and warm-up. The first set-up runs from process start; before each
    later one the session is stopped and the package is dropped from
    ``sys.modules`` and imported again, on the same JVM.
-2. One checked, untimed pass (correctness checks; warms every code path).
+2. One checked, untimed pass (correctness checks; warms every code path),
+   then the workload's ``warm_passes`` untimed passes (JIT warm-up).
 3. Timed passes, whole passes until ``seconds`` have elapsed.
 4. Traced runs only: one more untraced pass (the overhead baseline), then
    the probes are installed and one more pass runs traced.
@@ -63,27 +64,27 @@ def teardown(spark, wl) -> None:
             del sys.modules[name]
 
 
-def peak_rss_mb(spark) -> float:
-    """Peak resident set (VmHWM) of this process plus its JVM."""
-    pids = [os.getpid(), spark.sparkContext._gateway.proc.pid]
-    total_kb = 0
-    for pid in pids:
+def peak_rss_mb(spark) -> dict[str, float]:
+    """Peak resident set (VmHWM) of this process and of its JVM."""
+    out = {}
+    for part, pid in (("python", os.getpid()),
+                      ("jvm", spark.sparkContext._gateway.proc.pid)):
         with open(f"/proc/{pid}/status") as fh:
             for line in fh:
                 if line.startswith("VmHWM:"):
-                    total_kb += int(line.split()[1])
-    return total_kb / 1024.0
+                    out[part] = int(line.split()[1]) / 1024.0
+    return out
 
 
-def end_to_end(ops, elapsed: float, setups: list[float], rss: float) -> dict:
-    lat = [o.latency_s for o in ops if o.error is None]
-    s = stats.summarize(lat)
+def end_to_end(ops, setups: list[float], rss: dict[str, float]) -> dict:
+    s = stats.summarize_kinds([(o.name, o.latency_s) for o in ops
+                               if o.error is None])
     return {
         "latency_p50_ms": s["p50"] * 1e3,
         "latency_p90_ms": s["p90"] * 1e3,
-        "throughput_per_s": len(lat) / elapsed,
+        "throughput_per_s": s["per_s"],
         "setup_s": statistics.median(setups),
-        "peak_rss_mb": rss,
+        "peak_rss_mb": sum(rss.values()),
     }, s
 
 
@@ -212,6 +213,8 @@ def main(config_path: str) -> int:
     t_check = time.perf_counter()
     ops = wl.check_pass()
     check_s = time.perf_counter() - t_check
+    for _ in range(wl.warm_passes):
+        ops += wl.run_pass()
     timed = []
     passes = 0
     t_start = time.perf_counter()
@@ -239,7 +242,9 @@ def main(config_path: str) -> int:
             baseline, traced)
         tracer.dump(cfg["spans_path"])
     ops += wl.verify()
-    metrics, summary = end_to_end(timed, elapsed, setups, peak_rss_mb(spark))
+    rss = peak_rss_mb(spark)
+    metrics, summary = end_to_end(timed, setups, rss)
+    result["peak_rss_parts_mb"] = rss
     result.setdefault("metrics", metrics)
     result["end_to_end"] = metrics
     result["latency_summary"] = summary
