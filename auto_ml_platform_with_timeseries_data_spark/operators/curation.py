@@ -41,7 +41,7 @@ from auto_ml_platform_with_timeseries_data_spark.functions.text_exprs import (
     word_ngrams,
 )
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 # Knuth multiplicative hash over a bounded residue: the pre-mod by
 # 1000003 (prime) keeps the product ≤ ~2.6e15, far inside BIGINT, so
@@ -1023,8 +1023,8 @@ def token_budget_head(df: DataFrame, id_col: str, text_col: str,
     equal-sized buckets — no sampled RangePartitioner, and (critically)
     __pid is a pure function of the row, so the totals pass and the
     final pass recompute it identically with NO persisted frame (the
-    previous spark_partition_id formulation needed a .persist() that
-    lived for the process lifetime); (2) per-bucket running sums
+    previous spark_partition_id formulation needed a persisted frame
+    that lived for the process lifetime); (2) per-bucket running sums
     execute in parallel under a window PARTITIONED by __pid; (3)
     per-bucket token totals (P rows — bounded driver state) become
     exact broadcast prefix offsets. Buckets whose offset already
@@ -1455,11 +1455,10 @@ def q169_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.md5(norm).alias("__fp"),
                     F.size(tokens(norm)).alias("__nw")))
     w = Window.partitionBy("__fp")
-    deduped = (slim
-               .withColumn("__canon", F.min("doc_id").over(w))
-               .filter(F.col("doc_id") == F.col("__canon"))
-               .drop("__canon", "__fp")
-               .persist())
+    deduped = keep(slim
+                   .withColumn("__canon", F.min("doc_id").over(w))
+                   .filter(F.col("doc_id") == F.col("__canon"))
+                   .drop("__canon", "__fp"))
     rates = _mix_rates(deduped, "source", budget_frac=0.5)
     mixed = (deduped.join(F.broadcast(rates), "source")
              .filter(hash_u32("doc_id") < F.col("__th")))
@@ -1794,7 +1793,7 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
     )
 
     scored = bigram_logprob(df, id_col, text_col)
-    per_doc = (
+    per_doc = keep(
         df.select(F.col(id_col).alias("doc_id"),
                   F.col(domain_col).alias("domain"),
                   F.size(tokens(normalize_text(text_col))).cast("long")
@@ -1810,7 +1809,6 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
         # every branch re-ran the whole LM scoring pipeline (24 source
         # scans in the plan). Persist the narrow (domain, ntok,
         # neg_micro) decision rows once.
-        .persist()
     )
     dom = per_doc.groupBy("domain").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1818,7 +1816,7 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
         F.sum("__neg_micro").alias("__s"))
     corpus = per_doc.agg(
         (F.sum("__neg_micro") / F.count(F.lit(1))).alias("__gmean"))
-    out = (
+    out = keep(
         dom.crossJoin(F.broadcast(corpus))
         .withColumn("mean_neg_lp_micro",
                     F.expr("__s div n_docs").cast("long"))
@@ -1840,7 +1838,6 @@ def domain_reweight(df: DataFrame, id_col: str, text_col: str,
                 F.lit(1_000_000) +
                 F.floor(F.col("excess_ppm") / 4).cast("long"))
             .cast("long"))
-        .persist()
     )
     total = out.agg(F.sum(F.col("tokens") * F.col("factor_ppm"))
                     .alias("__tot"))

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 _FC_W = 16
 _FC_ALPHAS = (0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9)
@@ -1491,24 +1491,22 @@ def seasonal_naive_detected(df: DataFrame, group_col: str, order: str,
     # subtrees (cur → the lag join AND the forecast filter; base) —
     # unpersisted, the plan re-ran the ACF detection twice and the
     # source scan + index window four times (7 source scans). Persist
-    # both; callers run under sessions that clear caches between
-    # queries.
-    per = dominant_acf_lag(df, group_col, order, detect_col, max_lag,
-                           tie_break=tie_break).filter(
+    # both.
+    per = keep(dominant_acf_lag(df, group_col, order, detect_col, max_lag,
+                                tie_break=tie_break).filter(
         F.col("best_lag").isNotNull()).select(
         F.col(group_col).alias("__g"),
-        F.col("best_lag").cast("long").alias("__m")).persist()
+        F.col("best_lag").cast("long").alias("__m")))
     ob = [F.asc(order)] + ([F.asc(tie_break)] if tie_break else [])
     w = Window.partitionBy("__g").orderBy(*ob)
-    idx = df.select(F.col(group_col).alias("__g"),
-                    F.col(order).alias(order),
-                    *([F.col(tie_break).alias(tie_break)]
-                      if tie_break else []),
-                    value.cast("long").alias("__v")).filter(
+    idx = keep(df.select(F.col(group_col).alias("__g"),
+                         F.col(order).alias(order),
+                         *([F.col(tie_break).alias(tie_break)]
+                           if tie_break else []),
+                         value.cast("long").alias("__v")).filter(
         F.col("__v").isNotNull()).select(
         "__g", "__v", F.row_number().over(w).alias("__i"),
-        F.count(F.lit(1)).over(Window.partitionBy("__g")).alias("__n"))\
-        .persist()
+        F.count(F.lit(1)).over(Window.partitionBy("__g")).alias("__n")))
     cur = (idx.join(per, "__g")
            .select("__g", "__m", "__n",
                    F.col("__i").alias("__ci"),

@@ -30,6 +30,7 @@ from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
     LINEITEM_FEATURES,
     LINEITEM_LABEL,
+    keep,
     load_table,
 )
 
@@ -614,9 +615,8 @@ def _ordinal_spans(lv: DataFrame) -> DataFrame:
     spark = lv.sparkSession
     dv = lv.groupBy("__ci", "__v").agg(F.count(F.lit(1)).alias("__c"))
     nparts = spark.sparkContext.defaultParallelism
-    ranged = (dv.repartitionByRange(nparts, F.asc("__ci"), F.asc("__v"))
-              .withColumn("__pid", F.spark_partition_id())
-              .persist())
+    ranged = keep(dv.repartitionByRange(nparts, F.asc("__ci"), F.asc("__v"))
+                  .withColumn("__pid", F.spark_partition_id()))
     totals = (ranged.groupBy("__ci", "__pid")
               .agg(F.sum("__c").alias("__t")).collect())
     acc: dict[int, int] = {}
@@ -629,20 +629,18 @@ def _ordinal_spans(lv: DataFrame) -> DataFrame:
     wcum = (Window.partitionBy("__ci", "__pid").orderBy("__v")
             .rowsBetween(Window.unboundedPreceding, -1))
     smaller = F.coalesce(F.sum("__c").over(wcum), F.lit(0)) + F.col("__off")
-    spans = (ranged.join(F.broadcast(off), ["__ci", "__pid"])
-             .select("__ci", "__v", F.col("__c").cast("long").alias("__c"),
-                     smaller.cast("long").alias("__s"))
-             .persist())
     # Eagerly materialize, THEN drop the upstream cache (r15, guide
     # §3.2/§5.4): persist-and-count instead of localCheckpoint — a
     # LogicalRDD reports no statistics, so every downstream join of the
     # distinct-value-sized span/rank maps fell back to sort-merge with
     # a full corpus exchange PER JOIN (q217 re-shuffled lineitem once
     # per column). InMemoryRelation carries exact in-memory sizes, so
-    # the small maps auto-broadcast again. The cache is an intra-query
-    # intermediate (distinct-value-sized); callers run under sessions
-    # that clear caches between queries.
-    spans.count()
+    # the small maps auto-broadcast again. The cache is a query-scoped
+    # intermediate (distinct-value-sized).
+    spans = keep(ranged.join(F.broadcast(off), ["__ci", "__pid"])
+                 .select("__ci", "__v",
+                         F.col("__c").cast("long").alias("__c"),
+                         smaller.cast("long").alias("__s")), eager=True)
     ranged.unpersist()
     return spans
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import in_scope, keep, load_table
 
 
 def _as_double(arr: Column) -> Column:
@@ -934,17 +934,13 @@ def q134_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hit-join don't re-run the two most expensive kernels in this
     module."""
     emb = load_table(spark, sf_dir, "embeddings")
-    exact = q35_embedding_neardup(spark, sf_dir).select("id_a", "id_b").cache()
-    approx = embedding_neardup_pairs_lsh(
+    exact = keep(q35_embedding_neardup(spark, sf_dir).select("id_a", "id_b"))
+    approx = keep(embedding_neardup_pairs_lsh(
         emb, "vec_id", "embedding", _NEARDUP_T, nbits=6, ntables=16,
-        nprobes=2).select("id_a", "id_b").cache()
-    try:
-        n_exact = exact.count()
-        n_found = approx.count()
-        n_hit = exact.join(approx, ["id_a", "id_b"]).count()
-    finally:
-        exact.unpersist()
-        approx.unpersist()
+        nprobes=2).select("id_a", "id_b"))
+    n_exact = exact.count()
+    n_found = approx.count()
+    n_hit = exact.join(approx, ["id_a", "id_b"]).count()
     return spark.createDataFrame(
         [(n_exact, n_found, int(n_hit),
           round(n_hit / n_exact, 4) if n_exact else 1.0)],
@@ -1819,8 +1815,8 @@ def _margin_from_pairs(pairs: DataFrame, k: int,
       29.4 s combined with this groupBy shape) — the huge expression
       falls out of whole-stage codegen, and unlike the fold it is
       re-evaluated per consumer. The dim-generic fold stays."""
-    pairs = pairs.persist()
-    pairs.count()  # materialize once; stats keep the sa/sb joins sane
+    # materialize once; stats keep the sa/sb joins sane
+    pairs = keep(pairs, eager=True)
     wa = Window.partitionBy("src_id").orderBy(F.desc("ci"), F.asc("tgt_id"))
     wb = Window.partitionBy("tgt_id").orderBy(F.desc("ci"), F.asc("src_id"))
     ranked = (pairs
@@ -2140,10 +2136,10 @@ def q250_margin_mining_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serializing — the certificate's wall is max(sides), not the sum.
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_full = pool.submit(margin_mine_pairs, src, tgt,
+        f_full = pool.submit(in_scope(margin_mine_pairs), src, tgt,
                              "vec_id", "embedding")
-        f_ann = pool.submit(margin_mine_pairs_banded, src, tgt, cents,
-                            "vec_id", "embedding")
+        f_ann = pool.submit(in_scope(margin_mine_pairs_banded), src, tgt,
+                            cents, "vec_id", "embedding")
         full = f_full.result().withColumnRenamed("margin", "margin_full")
         ann = f_ann.result().withColumnRenamed("margin", "margin_ann")
     out = full.join(ann, ["src_id", "tgt_id"], "full_outer")
@@ -2225,10 +2221,10 @@ def q267_margin_agreement_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair materializations overlap (same rationale as q250)
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_full = pool.submit(margin_mine_pairs, src, tgt,
+        f_full = pool.submit(in_scope(margin_mine_pairs), src, tgt,
                              "vec_id", "embedding", margin=0.0)
-        f_ann = pool.submit(margin_mine_pairs_banded, src, tgt, cents,
-                            "vec_id", "embedding", margin=0.0)
+        f_ann = pool.submit(in_scope(margin_mine_pairs_banded), src, tgt,
+                            cents, "vec_id", "embedding", margin=0.0)
         full, ann = f_full.result(), f_ann.result()
     # one pass over each mining run: left-join marks coverage, a single
     # aggregate reads |full| and |full ∩ banded| together (a separate

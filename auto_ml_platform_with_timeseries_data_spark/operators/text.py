@@ -18,7 +18,7 @@ from auto_ml_platform_with_timeseries_data_spark.functions.text_exprs import (
     tokens,
 )
 from auto_ml_platform_with_timeseries_data_spark.registry import query
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table
+from auto_ml_platform_with_timeseries_data_spark.tables import keep, load_table
 
 # Synthetic language profiles over the fixtures' generator vocabulary.
 # Real language-ID swaps in per-language stopword/character-ngram
@@ -999,32 +999,27 @@ def bpe_learn(df: DataFrame, text_col: str, num_merges: int = 10,
     documents — so rounds cost seconds; the loop count (vocab size) is
     the training budget, exactly as in single-node BPE."""
     spark = df.sparkSession
-    state = _word_freqs(df, text_col).select(
-        "cnt", F.split("w", "").alias("syms")).persist()
+    state = keep(_word_freqs(df, text_col).select(
+        "cnt", F.split("w", "").alias("syms")))
     merges: list[tuple] = []
-    cached = state
-    try:
-        for rank in range(1, num_merges + 1):
-            best = (
-                state.select("cnt", F.explode(_adjacent_pairs(F.col("syms")))
-                             .alias("p"))
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("cnt").alias("c"))
-                .orderBy(F.desc("c"), "l", "r")
-                .first()
-            )
-            if best is None or best["c"] < min_count:
-                break
-            merges.append((rank, best["l"], best["r"], int(best["c"]),
-                           best["l"] + best["r"]))
-            nxt = state.select(
-                "cnt", _apply_merge(F.col("syms"), best["l"], best["r"])
-                .alias("syms")).persist()
-            nxt.count()  # materialize before releasing the parent
-            cached.unpersist()
-            state, cached = nxt, nxt
-    finally:
-        cached.unpersist()
+    for rank in range(1, num_merges + 1):
+        best = (
+            state.select("cnt", F.explode(_adjacent_pairs(F.col("syms")))
+                         .alias("p"))
+            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+            .agg(F.sum("cnt").alias("c"))
+            .orderBy(F.desc("c"), "l", "r")
+            .first()
+        )
+        if best is None or best["c"] < min_count:
+            break
+        merges.append((rank, best["l"], best["r"], int(best["c"]),
+                       best["l"] + best["r"]))
+        nxt = keep(state.select(
+            "cnt", _apply_merge(F.col("syms"), best["l"], best["r"])
+            .alias("syms")), eager=True)
+        state.unpersist()   # only once nxt is materialized
+        state = nxt
     return spark.createDataFrame(
         merges,
         "rank int, left string, right string, pair_count long, "
@@ -1313,11 +1308,10 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # re-scanned the source and re-ran the normalize+tokenize regexes
     # (5 source scans in the plan, the tokenizer being the expensive
     # part). Persist the (id, tokens) frame once — the same pattern
-    # the minhash pipeline pins with its single-scan plan test;
-    # callers run under sessions that clear caches between queries.
-    base = df.select(
+    # the minhash pipeline pins with its single-scan plan test.
+    base = keep(df.select(
         F.col(id_col).alias("__id"),
-        tokens(normalize_text(text_col)).alias("__toks")).persist()
+        tokens(normalize_text(text_col)).alias("__toks")))
     bg = base.select(
         "__id",
         F.explode(F.zip_with(

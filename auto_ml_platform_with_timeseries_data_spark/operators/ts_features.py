@@ -27,8 +27,8 @@ from pyspark.sql.window import Window
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
+    keep,
     load_table,
-    persist_if_scan_heavy,
 )
 
 _TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -3613,10 +3613,8 @@ def hbos_scores(df: DataFrame, id_col: str,
     # bin counts, per-row scoring). Persist the NARROW frame so the
     # source — typically a JSON-parsing scan, the expensive part — is
     # decoded once, not once per pass (guide §1.2/§5: cache only what
-    # is reused and slim). Intra-query intermediate; callers run under
-    # sessions that clear caches between queries (_ordinal_spans'
-    # documented contract).
-    src = src.persist()
+    # is reused and slim). Query-scoped intermediate.
+    src = keep(src)
     stats = src.agg(*[a for k in names for a in (
         F.min(f"__f_{k}").alias(f"__lo_{k}"),
         F.max(f"__f_{k}").alias(f"__hi_{k}"))])
@@ -3638,8 +3636,8 @@ def hbos_scores(df: DataFrame, id_col: str,
     if nbins ** len(names) <= joint_cells:
         # ≤ joint_cells rows, read twice per feature (marginal sum +
         # its max) — persist so the joint aggregate runs once
-        joint = out.groupBy(*[f"bin_{k}" for k in names]).agg(
-            F.count(F.lit(1)).cast("long").alias("__jc")).persist()
+        joint = keep(out.groupBy(*[f"bin_{k}" for k in names]).agg(
+            F.count(F.lit(1)).cast("long").alias("__jc")))
         for k in names:
             hist = joint.groupBy(f"bin_{k}").agg(
                 F.sum("__jc").cast("long").alias(f"__c_{k}"))
@@ -4245,17 +4243,15 @@ def q346_fleet_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # windows, MAD, matrix profile) each re-scan events; all of them
     # consume only these four columns, so persist the narrow filtered
     # projection and scan the source once (guide §5: cache only what
-    # is reused, slim). SIZE-GATED (persist_if_scan_heavy): at sf0.1
+    # is reused, slim). SIZE-GATED (keep(source=)): at sf0.1
     # the 3 saved re-scans of a ~3 MB source are cheaper than the
     # cache barrier (paired A/B 1.95 vs 2.36 s); at production sizes
-    # they are not. Intra-query intermediate — callers run under
-    # sessions that clear caches between queries. The streaming epoch
-    # loop (q350) passes its own per-epoch delta frames to
-    # fleet_evidence directly and manages their lifecycle itself.
+    # they are not. The streaming epoch loop (q350) passes its own
+    # per-epoch delta frames to fleet_evidence directly.
     ev = (load_table(spark, sf_dir, "events")
           .filter(F.col("value").isNotNull())
           .select("user_id", "ts", "event_id", "value"))
-    ev = persist_if_scan_heavy(ev, ev)
+    ev = keep(ev, source=ev)
     return fleet_triage(
         ev, "user_id", "ts", "event_id", "value",
         F.floor(F.col("value") * 100 + F.lit(0.5)),

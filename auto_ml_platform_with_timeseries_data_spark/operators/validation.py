@@ -23,8 +23,8 @@ from pyspark.sql.window import Window
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query
 from auto_ml_platform_with_timeseries_data_spark.tables import (
+    keep,
     load_table,
-    persist_if_scan_heavy,
 )
 
 
@@ -200,16 +200,16 @@ def gdpr_erase(customer: DataFrame, orders: DataFrame,
     # the source scan + distinct (21 source scans in the plan). Both
     # frames are tiny by the erasure contract (subjects are a small
     # fraction); persist SIZE-GATED on the scanned source
-    # (persist_if_scan_heavy — at sf0.1 the re-scans are cheaper than
-    # the cache barrier, measured 0.93 vs 1.33 s paired) and broadcast
+    # (keep(source=) — at sf0.1 the re-scans are cheaper than the
+    # cache barrier, measured 0.93 vs 1.33 s paired) and broadcast
     # everywhere.
-    ekeys = persist_if_scan_heavy(erase_keys.select(F.col(
-        erase_keys.columns[0]).alias("__k")).distinct(), erase_keys)
+    ekeys = keep(erase_keys.select(F.col(
+        erase_keys.columns[0]).alias("__k")).distinct(), source=erase_keys)
     ek = F.broadcast(ekeys)
     dead_orders = orders.join(
         ek, orders["o_custkey"] == F.col("__k"), "leftsemi")
-    dead_okeys = persist_if_scan_heavy(
-        dead_orders.select("o_orderkey").distinct(), orders)
+    dead_okeys = keep(dead_orders.select("o_orderkey").distinct(),
+                      source=orders)
     live_cust = customer.join(
         ek, customer["c_custkey"] == F.col("__k"), "leftanti")
     live_orders = orders.join(
@@ -2947,15 +2947,13 @@ def friedman_test(df: DataFrame, value: Column, block_col: str,
     # construction) feeds FIVE downstream subtrees (k, block sizes,
     # kept→ranked→rank sums, kept→ties, complete→nblocks); unpersisted,
     # each re-ran the source scan + cell groupBy — 9 source scans in
-    # the plan. Persist SIZE-GATED (persist_if_scan_heavy): the
+    # the plan. Persist SIZE-GATED (keep(source=)): the
     # unconditional persist measured ~2x SLOWER at sf0.1 (paired A/B,
     # 0.98 vs 1.92 s — cache barrier beats re-reading a 3 MB source),
     # while at production source sizes the 5 saved scans dominate.
-    # Callers run under sessions that clear caches between queries
-    # (the _ordinal_spans contract).
-    cells = persist_if_scan_heavy(src.groupBy("__b", "__t").agg(
+    cells = keep(src.groupBy("__b", "__t").agg(
         F.floor(F.sum("__v").cast("double") / F.count(F.lit(1))
-                * F.lit(1e4)).cast("long").alias("__score")), src)
+                * F.lit(1e4)).cast("long").alias("__score")), source=src)
     kfr = cells.agg(F.count_distinct("__t").cast("long").alias("__k"))
     sized = cells.groupBy("__b").agg(
         F.count(F.lit(1)).cast("long").alias("__nb"))
@@ -3112,14 +3110,14 @@ def cochran_q(df: DataFrame, value: Column, block_col: str,
     # r15 optimization: cells (blocks × treatments rows) feeds kfr,
     # complete and marked — unpersisted, each re-ran the source scan +
     # groupBy (9 source scans in the plan). Persist SIZE-GATED
-    # (persist_if_scan_heavy; the unconditional persist measured ~2x
-    # slower at sf0.1 — 0.79 vs 1.69 s paired — see the helper's
-    # docstring). The block totals come FROM cells either way (sum of
-    # per-cell exact sums/counts — identical decimal/long values), not
-    # a second pass over the source.
-    cells = persist_if_scan_heavy(src.groupBy("__b", "__t").agg(
+    # (keep(source=); the unconditional persist measured ~2x slower at
+    # sf0.1 — 0.79 vs 1.69 s paired — see tables.PERSIST_SRC_MB).
+    # The block totals come FROM cells either way (sum of per-cell
+    # exact sums/counts — identical decimal/long values), not a second
+    # pass over the source.
+    cells = keep(src.groupBy("__b", "__t").agg(
         F.sum("__v").cast("decimal(38,0)").alias("__cs"),
-        F.count(F.lit(1)).cast("long").alias("__cn")), src)
+        F.count(F.lit(1)).cast("long").alias("__cn")), source=src)
     blocks = cells.groupBy("__b").agg(
         F.sum("__cs").cast("decimal(38,0)").alias("__bs"),
         F.sum("__cn").cast("long").alias("__bn"))

@@ -37,15 +37,3 @@ def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
         "PushedFilters" in line and fragment in line
         for line in plan.splitlines()
     )
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in formatted_plan(df)
-
-
-def has_partial_aggregate(df: DataFrame) -> bool:
-    return "partial_" in formatted_plan(df) or "HashAggregate" in formatted_plan(df)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("WholeStageCodegen")

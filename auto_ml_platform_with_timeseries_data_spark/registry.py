@@ -19,6 +19,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from auto_ml_platform_with_timeseries_data_spark.tables import scoped
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 QUERIES: dict[str, QueryFn] = {}
@@ -266,10 +268,11 @@ def _ordered(d: dict) -> dict:
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a named query; ``oracle`` is DuckDB SQL or None (rows-only)."""
+    """Register a named query, run in a cache scope (``tables.scoped``);
+    ``oracle`` is DuckDB SQL or None (rows-only)."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        QUERIES[name] = fn
+        QUERIES[name] = fn = scoped(fn)
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

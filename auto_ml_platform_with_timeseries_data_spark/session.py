@@ -10,7 +10,10 @@ byte-comparable with the DuckDB oracle (DuckDB timestamps are UTC-naive).
 from __future__ import annotations
 
 import os
+import warnings
 
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Confs that are safe to (re)apply to an existing session at runtime.
@@ -40,22 +43,40 @@ _RUNTIME_CONFS = {
     # generated code size, not the data); the wide-aggregate forecast
     # kernels are exactly the shape that trips it.
     "spark.sql.codegen.hugeMethodLimit": "8000",
+    # events.parquet stores TIMESTAMP(NANOS), which the vectorized reader
+    # rejects: read it as long; load_table() truncates it as DuckDB does.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+_WARNED: set[str] = set()
+
+
+def warn_once(key: str, message: str) -> None:
+    """A fallback that keeps the engine running still says so, once."""
+    if key not in _WARNED:
+        _WARNED.add(key)
+        warnings.warn(message, RuntimeWarning, stacklevel=3)
 
 
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally created session.
+    """Apply runtime-settable confs to an externally created session,
+    once: later changes by its owner (get_spark's shuffle_partitions)
+    stand. Flagged on the session, where runtime confs live.
 
     The correctness driver hands us its own SparkSession; pinning the
     timezone + AQE + Arrow here keeps engine semantics independent of how
     the session was built.
     """
+    if getattr(spark, "_sparkgraft_tuned", False):
+        return spark
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on this build — leave as-is
+        except (AnalysisException, Py4JError) as exc:
+            warn_once(f"conf {k}", f"tune: could not set {k}={v} "
+                      f"({type(exc).__name__}: {exc}); leaving it as-is")
     _ship_package(spark)
+    spark._sparkgraft_tuned = True
     return spark
 
 
@@ -77,11 +98,12 @@ def _ship_package(spark: SparkSession) -> None:
     if os.environ.get("SPARK_GRAFT_NO_SHIP"):
         sc._sparkgraft_pkg_shipped = True
         return
-    try:
-        import shutil
-        import tempfile
+    import shutil
+    import tempfile
 
-        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    zip_path = None
+    try:
         base = tempfile.mkdtemp(prefix="sparkgraft_pyfiles_")
         zip_path = shutil.make_archive(
             os.path.join(base, os.path.basename(pkg_dir)), "zip",
@@ -89,8 +111,11 @@ def _ship_package(spark: SparkSession) -> None:
             base_dir=os.path.basename(pkg_dir),
         )
         sc.addPyFile(zip_path)
-    except Exception:
-        pass  # driver-side import still works; only remote workers affected
+    except (OSError, Py4JError) as exc:
+        # local imports still work; only remote workers are affected
+        warn_once("ship package",
+                  f"could not ship {zip_path or pkg_dir} to Python "
+                  f"workers ({type(exc).__name__}: {exc})")
     sc._sparkgraft_pkg_shipped = True
 
 

@@ -15,6 +15,8 @@ stream.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -100,7 +102,7 @@ def run_to_memory(df: DataFrame, name: str, output_mode: str = "append",
 # ---------------------------------------------------------------------------
 
 from auto_ml_platform_with_timeseries_data_spark.registry import query  # noqa: E402
-from auto_ml_platform_with_timeseries_data_spark.tables import load_table  # noqa: E402
+from auto_ml_platform_with_timeseries_data_spark.tables import in_scope, keep, load_table  # noqa: E402
 
 # Staged stream directories, memoized per variant key — usually
 # (variant, sf_dir), sometimes with extra parameters appended: the
@@ -151,27 +153,12 @@ def _write_ordered_slices(sliced: DataFrame, d: str, n: int = 4) -> None:
             _os.utime(_os.path.join(d, f), (base + i, base + i))
 
 
-def _staged_plain(spark: SparkSession, sf_dir: str) -> str:
-    """events as 4 unordered parquet files (windowed-agg inputs)."""
-    key = ("plain4", sf_dir)
-    if key not in _STAGE_CACHE:
-        from auto_ml_platform_with_timeseries_data_spark.staging import (
-            staging_dir,
-        )
-
-        ev = load_table(spark, sf_dir, "events")
-        d = staging_dir("stream_plain", fresh=True)
-        ev.repartition(4).write.mode("overwrite").parquet(d)
-        _STAGE_CACHE[key] = d
-    return _STAGE_CACHE[key]
-
-
-def _staged_time_sliced(spark: SparkSession, sf_dir: str,
-                        doubled: bool = False) -> str:
-    """events as 4 TIME-RANGE slices written sequentially in time order
-    (watermark-safe arrival order; see q52's docstring), optionally with
-    every event doubled (at-least-once delivery simulation)."""
-    key = ("sliced4_doubled" if doubled else "sliced4", sf_dir)
+def _staged(key: tuple, tag: str, frame: Callable[[], DataFrame],
+            order: tuple[str, ...] = ()) -> str:
+    """The staging directory memoized under `key`, written on first use
+    into a fresh `tag` directory: ``frame()`` as 4 unordered parquet
+    files or, given `order`, as 4 sequential slices in that order
+    (``_write_ordered_slices``)."""
     if key not in _STAGE_CACHE:
         from pyspark.sql.window import Window
 
@@ -179,14 +166,34 @@ def _staged_time_sliced(spark: SparkSession, sf_dir: str,
             staging_dir,
         )
 
-        ev = load_table(spark, sf_dir, "events")
-        if doubled:
-            ev = ev.unionAll(ev)
-        d = staging_dir("stream_sliced", fresh=True)
-        sliced = ev.withColumn("__slice", F.ntile(4).over(Window.orderBy("ts")))
-        _write_ordered_slices(sliced, d)
+        df = frame()
+        d = staging_dir(tag, fresh=True)
+        if order:
+            _write_ordered_slices(df.withColumn(
+                "__slice", F.ntile(4).over(Window.orderBy(*order))), d)
+        else:
+            df.repartition(4).write.mode("overwrite").parquet(d)
         _STAGE_CACHE[key] = d
     return _STAGE_CACHE[key]
+
+
+def _staged_plain(spark: SparkSession, sf_dir: str) -> str:
+    """events as 4 unordered parquet files (windowed-agg inputs)."""
+    return _staged(("plain4", sf_dir), "stream_plain",
+                   lambda: load_table(spark, sf_dir, "events"))
+
+
+def _staged_time_sliced(spark: SparkSession, sf_dir: str,
+                        doubled: bool = False) -> str:
+    """events as 4 TIME-RANGE slices written sequentially in time order
+    (watermark-safe arrival order; see q52's docstring), optionally with
+    every event doubled (at-least-once delivery simulation)."""
+    def events() -> DataFrame:
+        ev = load_table(spark, sf_dir, "events")
+        return ev.unionAll(ev) if doubled else ev
+
+    return _staged(("sliced4_doubled" if doubled else "sliced4", sf_dir),
+                   "stream_sliced", events, order=("ts",))
 
 
 @query(
@@ -577,22 +584,9 @@ def _staged_delta_docs(spark: SparkSession, sf_dir: str) -> str:
     """The q154 delta batch (doc_id % 5 == 0) staged as 4 sequential
     doc_id-ordered files — the 'today's crawl arrives in chunks'
     shape."""
-    key = ("delta_docs4", sf_dir)
-    if key not in _STAGE_CACHE:
-        from pyspark.sql.window import Window
-
-        from auto_ml_platform_with_timeseries_data_spark.staging import (
-            staging_dir,
-        )
-
-        docs = load_table(spark, sf_dir, "documents") \
-            .filter(F.col("doc_id") % 5 == 0)
-        d = staging_dir("stream_delta_docs", fresh=True)
-        sliced = docs.withColumn(
-            "__slice", F.ntile(4).over(Window.orderBy("doc_id")))
-        _write_ordered_slices(sliced, d)
-        _STAGE_CACHE[key] = d
-    return _STAGE_CACHE[key]
+    return _staged(("delta_docs4", sf_dir), "stream_delta_docs",
+                   lambda: load_table(spark, sf_dir, "documents")
+                   .filter(F.col("doc_id") % 5 == 0), order=("doc_id",))
 
 
 @query(
@@ -696,21 +690,9 @@ def q170_stream_incremental_dedup(spark: SparkSession,
 def _staged_doc_batches(spark: SparkSession, sf_dir: str) -> str:
     """ALL documents as 4 sequential doc_id-ordered files — four crawl
     'days' arriving in order."""
-    key = ("doc_batches4", sf_dir)
-    if key not in _STAGE_CACHE:
-        from pyspark.sql.window import Window
-
-        from auto_ml_platform_with_timeseries_data_spark.staging import (
-            staging_dir,
-        )
-
-        docs = load_table(spark, sf_dir, "documents")
-        d = staging_dir("stream_doc_batches", fresh=True)
-        sliced = docs.withColumn(
-            "__slice", F.ntile(4).over(Window.orderBy("doc_id")))
-        _write_ordered_slices(sliced, d)
-        _STAGE_CACHE[key] = d
-    return _STAGE_CACHE[key]
+    return _staged(("doc_batches4", sf_dir), "stream_doc_batches",
+                   lambda: load_table(spark, sf_dir, "documents"),
+                   order=("doc_id",))
 
 
 @query(
@@ -796,21 +778,9 @@ def q182_stream_index_maintenance(spark: SparkSession,
 def _staged_event_batches(spark: SparkSession, sf_dir: str) -> str:
     """ALL events as 4 sequential ts-ordered files — four ingest 'days'
     arriving in order."""
-    key = ("event_batches4", sf_dir)
-    if key not in _STAGE_CACHE:
-        from pyspark.sql.window import Window
-
-        from auto_ml_platform_with_timeseries_data_spark.staging import (
-            staging_dir,
-        )
-
-        ev = load_table(spark, sf_dir, "events")
-        d = staging_dir("stream_event_batches", fresh=True)
-        sliced = ev.withColumn(
-            "__slice", F.ntile(4).over(Window.orderBy("ts", "event_id")))
-        _write_ordered_slices(sliced, d)
-        _STAGE_CACHE[key] = d
-    return _STAGE_CACHE[key]
+    return _staged(("event_batches4", sf_dir), "stream_event_batches",
+                   lambda: load_table(spark, sf_dir, "events"),
+                   order=("ts", "event_id"))
 
 
 def rollup_partial(bdf: DataFrame) -> DataFrame:
@@ -1000,22 +970,10 @@ def _staged_media_id_batches(spark: SparkSession, sf_dir: str,
     """doc_id < hi as 4 sequential id-ordered files — four crawl 'days'
     of media arriving in order (ids only; the media bytes synthesize
     map-side per batch, so the stream source stays tiny)."""
-    key = ("media_id_batches4", sf_dir, hi)
-    if key not in _STAGE_CACHE:
-        from pyspark.sql.window import Window
-
-        from auto_ml_platform_with_timeseries_data_spark.staging import (
-            staging_dir,
-        )
-
-        ids = (load_table(spark, sf_dir, "documents").select("doc_id")
-               .filter(F.col("doc_id") < hi))
-        d = staging_dir("stream_media_ids", fresh=True)
-        sliced = ids.withColumn(
-            "__slice", F.ntile(4).over(Window.orderBy("doc_id")))
-        _write_ordered_slices(sliced, d)
-        _STAGE_CACHE[key] = d
-    return _STAGE_CACHE[key]
+    return _staged(("media_id_batches4", sf_dir, hi), "stream_media_ids",
+                   lambda: load_table(spark, sf_dir, "documents")
+                   .select("doc_id").filter(F.col("doc_id") < hi),
+                   order=("doc_id",))
 
 
 def perceptual_index_epoch(sp: SparkSession, bdf: DataFrame,
@@ -1193,8 +1151,7 @@ def perceptual_screen_epoch(sp: SparkSession, bdf: DataFrame,
         synth_bmp_media_mixed,
     )
 
-    fp = (image_dhash(synth_bmp_media_mixed(bdf))
-          .localCheckpoint(eager=True))
+    fp = keep(image_dhash(synth_bmp_media_mixed(bdf)), checkpoint=True)
     versions = rollup_versions(state_root)
     prev = [p for e, p in versions.items() if e < epoch_id]
     delta_idx = (fp.groupBy("dhash_lo", "dhash_hi")
@@ -1278,6 +1235,7 @@ def q251_stream_near_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     screen_root = staging_dir("stream_nscreen_out")
     ckpt = staging_dir("stream_nscreen_ckpt")
 
+    @in_scope   # foreachBatch calls back on another thread
     def step(bdf: DataFrame, epoch_id: int) -> None:
         perceptual_screen_epoch(bdf.sparkSession, bdf, epoch_id,
                                 state_root, screen_root)
@@ -1366,11 +1324,11 @@ def fleet_triage_epoch(sp: SparkSession, bdf: DataFrame, epoch_id: int,
         fleet_evidence,
     )
 
-    batch = (bdf.filter(F.col("value").isNotNull())
-             .select("user_id", "ts", "event_id", "value")
-             .withColumn("__bkt", F.pmod(F.xxhash64("user_id"),
-                                         F.lit(n_buckets)).cast("int"))
-             .localCheckpoint(eager=True))   # read 3× below; micro-batch-sized
+    batch = keep(bdf.filter(F.col("value").isNotNull())   # read 3× below
+                 .select("user_id", "ts", "event_id", "value")
+                 .withColumn("__bkt", F.pmod(F.xxhash64("user_id"),
+                                             F.lit(n_buckets)).cast("int")),
+                 checkpoint=True)
     bkts = [r["__bkt"] for r in batch.select("__bkt").distinct().collect()]
     if not bkts:
         return
@@ -1438,6 +1396,7 @@ def q350_stream_fleet_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     evid_root = staging_dir("stream_ftri_evid")
     ckpt = staging_dir("stream_ftri_ckpt")
 
+    @in_scope   # foreachBatch calls back on another thread
     def step(bdf: DataFrame, epoch_id: int) -> None:
         fleet_triage_epoch(bdf.sparkSession, bdf, epoch_id,
                            events_root, evid_root)

@@ -356,15 +356,13 @@ def test_global_sorted_export_via_range_partitioning(spark, sf_dir, tmp_path):
 
 def test_fleet_triage_single_source_scan(spark, sf_dir, monkeypatch):
     """q346 (r15 optimization): with the persist size-gate forced on
-    (SPARK_GRAFT_PERSIST_SRC_MB=0 — the at-scale shape), the four
+    (tables.PERSIST_SRC_MB=0 — the at-scale shape), the four
     evidence subtrees — distinct series, residual windows, MAD, matrix
     profile — must share ONE scan of events via the persisted narrow
     projection; the unshared shape re-read the source 10 times
     (plans/r15/q346_*_before.txt)."""
-    from auto_ml_platform_with_timeseries_data_spark.tables import (
-        PERSIST_SRC_MB_ENV,
-    )
-    monkeypatch.setenv(PERSIST_SRC_MB_ENV, "0")
+    from auto_ml_platform_with_timeseries_data_spark import tables
+    monkeypatch.setattr(tables, "PERSIST_SRC_MB", 0)
     df = queries()["q346_fleet_triage"](spark, sf_dir)
     try:
         plan = explain.formatted_plan(df)
@@ -374,17 +372,14 @@ def test_fleet_triage_single_source_scan(spark, sf_dir, monkeypatch):
         spark.catalog.clearCache()
 
 
-def test_fleet_triage_size_gate_defaults_off_at_bench_scale(
-        spark, sf_dir, monkeypatch):
-    """The persist size-gate (tables.persist_if_scan_heavy) must NOT
+def test_fleet_triage_size_gate_defaults_off_at_bench_scale(spark, sf_dir):
+    """The persist size-gate (tables.keep(source=)) must NOT
     fire for the ~MB bench fixtures under the default 256 MB threshold
     — at that size the cache barrier measured ~2x slower than the
     saved re-scans (OPTIMIZATION_r15.md batch 4), so the plan stays
     cache-free."""
-    from auto_ml_platform_with_timeseries_data_spark.tables import (
-        PERSIST_SRC_MB_ENV,
-    )
-    monkeypatch.delenv(PERSIST_SRC_MB_ENV, raising=False)
+    from auto_ml_platform_with_timeseries_data_spark import tables
+    assert tables.PERSIST_SRC_MB == 256.0
     df = queries()["q346_fleet_triage"](spark, sf_dir)
     try:
         plan = explain.formatted_plan(df)
